@@ -150,21 +150,13 @@ class CdcPipeline:
     def __init__(self, config: dict, connection_factory) -> None:
         self.config = config
         self.chain = build_transform_chain(config.get("transforms", ()))
-        sink = config["sink"]
+        # the sink config is the engine's keyword arguments, so the
+        # engine's defaults hold and a misspelt key raises TypeError
+        sink = dict(config["sink"])
         self.engine = CdcApplyEngine(
             connection_factory=connection_factory,
-            dialect=dialect_for(sink.get("dialect", "sqlite")),
-            pk_fields=sink["pk_fields"],
-            value_cols=sink["value_cols"],
-            table_col=sink.get("table_col", "target_table"),
-            order_cols=sink.get("order_cols", ["offset"]),
-            errors_tolerance=sink.get("errors_tolerance", "none"),
-            auto_create=sink.get("auto_create", True),
-            auto_evolve=sink.get("auto_evolve", True),
-            corrupt_table=sink.get("corrupt_table"),
-            distribute=sink.get("distribute", "auto"),
-            distribute_threshold=sink.get("distribute_threshold", 100_000),
-            num_partitions=sink.get("num_partitions"),
+            dialect=dialect_for(sink.pop("dialect", "sqlite")),
+            **sink,
         )
 
     def run_batch(self, df: DataFrame) -> None:

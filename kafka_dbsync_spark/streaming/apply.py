@@ -32,11 +32,15 @@ engine for the canonical single-writer configuration.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import logging
 from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_dbsync_spark.functions.entrytype import OP_DELETE, OP_UPSERT
 from kafka_dbsync_spark.operators.merge import latest_by_key
@@ -57,8 +61,91 @@ CORRUPT_TABLE_SCHEMA = (
     "created_at",
 )
 
+# rows per executemany call: driver (and executor) memory stays O(chunk)
+# however large the batch (e.g. a backfill replay), while the
+# transaction still spans the whole table
+CHUNK_ROWS = 10_000
 
-class CdcApplyEngine:
+
+@contextmanager
+def transaction(connection_factory: Callable[[], object]):
+    """One connection holding one transaction: commit when the block
+    succeeds, roll back and re-raise when it fails, close either way."""
+    conn = connection_factory()
+    try:
+        yield conn
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
+    finally:
+        conn.close()
+
+
+def write_chunked(cur, rows, route: Callable) -> int:
+    """Batched ``executemany`` from a row iterator. ``route(row)`` gives
+    the row's ``(statement, params)``, or None to skip it; each
+    statement's parameters flush every ``CHUNK_ROWS`` rows. Rows routed
+    to different statements must commute (last-write-wins leaves one row
+    per key), since each statement flushes on its own count. Returns the
+    number of rows written."""
+    pending: dict[str, list[tuple]] = {}
+    n = 0
+    for r in rows:
+        routed = route(r)
+        if routed is None:
+            continue
+        sql, params = routed
+        buf = pending.setdefault(sql, [])
+        buf.append(params)
+        if len(buf) >= CHUNK_ROWS:
+            cur.executemany(sql, buf)
+            n += len(buf)
+            pending[sql] = []
+    for sql, buf in pending.items():
+        if buf:
+            cur.executemany(sql, buf)
+            n += len(buf)
+    return n
+
+
+def _change_router(dialect: Dialect, pk, value_cols, op_col: str):
+    """``route(table, row)`` for ``write_chunked``: an upsert carries key +
+    values, a delete the key, any other op is skipped."""
+    cols = [*pk, *value_cols]
+    stmts: dict[str, tuple[str, str]] = {}
+
+    def route(table: str, r):
+        if table not in stmts:
+            stmts[table] = (
+                dialect.upsert_sql(table, cols, pk),
+                dialect.delete_sql(table, pk),
+            )
+        upsert, delete = stmts[table]
+        op = r[op_col]
+        if op == OP_UPSERT:
+            return upsert, tuple(r[c] for c in cols)
+        if op == OP_DELETE:
+            return delete, tuple(r[c] for c in pk)
+        return None
+
+    return route
+
+
+class BatchSink:
+    """A foreachBatch sink: ``apply_batch(df, epoch_id)`` commits one
+    micro-batch, and replaying an epoch converges to the same state."""
+
+    def foreach_batch(self):
+        """Callable for DataStreamWriter.foreachBatch."""
+
+        def fn(batch_df: DataFrame, epoch_id: int) -> None:
+            self.apply_batch(batch_df, epoch_id)
+
+        return fn
+
+
+class CdcApplyEngine(BatchSink):
     """Applies validated CDC micro-batches into DB tables.
 
     Parameters mirror the reference's sink config (IidrCdcSinkConfig):
@@ -119,17 +206,11 @@ class CdcApplyEngine:
         # connections; None lets AQE size the exchange (it will coalesce
         # small batches down to few connections, which is usually right)
         self.num_partitions = num_partitions
+        # tables whose CREATE has committed — on a target with transactional
+        # DDL a rollback undoes the CREATE, and the replay must issue it again
         self._known_tables: set[str] = set()
 
-    # -- public entry points ------------------------------------------------
-    def foreach_batch(self):
-        """Callable for DataStreamWriter.foreachBatch."""
-
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(batch_df, epoch_id)
-
-        return fn
-
+    # -- public entry point ---------------------------------------------------
     def apply_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         """Apply one (batch or micro-batch) DataFrame of validated records.
 
@@ -142,22 +223,7 @@ class CdcApplyEngine:
         # single pass over the poll batch
         batch_df = batch_df.persist()
         try:
-            has_errors = "error_reason" in batch_df.columns
-            if has_errors:
-                corrupt = batch_df.filter(F.col("error_reason").isNotNull())
-                if "created_at" not in corrupt.columns:
-                    # dead-letter insertion timestamp (CorruptEventWriter
-                    # populates created_at with now())
-                    corrupt = corrupt.withColumn(
-                        "created_at",
-                        F.date_format(
-                            F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"
-                        ),
-                    )
-                valid = batch_df.filter(F.col("error_reason").isNull())
-                self._handle_corrupt(corrupt)
-            else:
-                valid = batch_df
+            valid = self._split_corrupt(batch_df)
 
             # A3: last write wins per (table, key) — before set-based apply
             order_cols = self.order_cols
@@ -182,10 +248,7 @@ class CdcApplyEngine:
                 # one-column partial-agg shuffle) — probing per_table
                 # instead would run the expensive dedup shuffle just to
                 # list tables. Dedup never drops a table, so the sets match.
-                tables = sorted(
-                    r[0]
-                    for r in valid.select(self.table_col).distinct().collect()
-                )
+                tables = self._tables(valid)
                 if len(tables) > 1:
                     # fan-out: materialize the deduped batch once with ONE
                     # parallel job so the N per-table passes read cache
@@ -223,7 +286,26 @@ class CdcApplyEngine:
             )
         return False
 
+    def _tables(self, df: DataFrame) -> list[str]:
+        return sorted(r[0] for r in df.select(self.table_col).distinct().collect())
+
     # -- corrupt branch (K9/K10) ---------------------------------------------
+    def _split_corrupt(self, batch_df: DataFrame) -> DataFrame:
+        """Send the rows carrying an ``error_reason`` down the corrupt
+        branch; return the valid rows."""
+        if "error_reason" not in batch_df.columns:
+            return batch_df
+        corrupt = batch_df.filter(F.col("error_reason").isNotNull())
+        if "created_at" not in corrupt.columns:
+            # dead-letter insertion timestamp (CorruptEventWriter
+            # populates created_at with now())
+            corrupt = corrupt.withColumn(
+                "created_at",
+                F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
+            )
+        self._handle_corrupt(corrupt)
+        return batch_df.filter(F.col("error_reason").isNull())
+
     def _handle_corrupt(self, corrupt: DataFrame) -> None:
         if not self.corrupt_table and self.errors_tolerance == "all":
             return  # silent-skip mode with no DLQ: nothing to evaluate
@@ -231,56 +313,30 @@ class CdcApplyEngine:
         # batch must not open a DLQ connection (or depend on DLQ health)
         if corrupt.isEmpty():
             return
-        n = 0
         if self.corrupt_table:
-            conn = self.connection_factory()
-            try:
-                cur = conn.cursor()
-                cols = [c for c in CORRUPT_TABLE_SCHEMA if c in corrupt.columns]
-                created = False
-                # stream every dead-letter row in bounded chunks — never
-                # cap (losing DLQ records defeats the DLQ)
-                chunk: list[tuple] = []
-                for r in corrupt.toLocalIterator():
-                    if not created:
-                        if (
-                            self.auto_create
-                            and self.corrupt_table not in self._known_tables
-                        ):
-                            # auto-create the dead-letter table from the
-                            # record shape (IidrCdcSinkTask.java:72-80)
-                            from pyspark.sql import types as T
+            table = self.corrupt_table
+            cols = [c for c in CORRUPT_TABLE_SCHEMA if c in corrupt.columns]
+            insert = self.dialect.insert_sql(table, cols)
 
-                            schema = T.StructType(
-                                [f for f in corrupt.schema.fields if f.name in cols]
-                            )
-                            cur.execute(
-                                self.dialect.create_table_sql(
-                                    self.corrupt_table, schema, ()
-                                )
-                            )
-                            self._known_tables.add(self.corrupt_table)
-                        created = True
-                    chunk.append(
-                        tuple(
-                            self._truncate_reason(r[c]) if c == "error_reason" else r[c]
-                            for c in cols
-                        )
+            def route(r):
+                return insert, tuple(
+                    self._truncate_reason(r[c]) if c == "error_reason" else r[c]
+                    for c in cols
+                )
+
+            with transaction(self.connection_factory) as conn:
+                cur = conn.cursor()
+                if self.auto_create and table not in self._known_tables:
+                    # auto-create the dead-letter table from the record
+                    # shape (IidrCdcSinkTask.java:72-80)
+                    schema = T.StructType(
+                        [f for f in corrupt.schema.fields if f.name in cols]
                     )
-                    if len(chunk) >= 10_000:
-                        cur.executemany(
-                            self.dialect.insert_sql(self.corrupt_table, cols), chunk
-                        )
-                        n += len(chunk)
-                        chunk = []
-                if chunk:
-                    cur.executemany(
-                        self.dialect.insert_sql(self.corrupt_table, cols), chunk
-                    )
-                    n += len(chunk)
-                conn.commit()
-            finally:
-                conn.close()
+                    cur.execute(self.dialect.create_table_sql(table, schema, ()))
+                # every dead-letter row is written, never capped (losing
+                # DLQ records defeats the DLQ)
+                n = write_chunked(cur, corrupt.toLocalIterator(), route)
+            self._known_tables.add(table)
         else:
             n = corrupt.count()
         if n == 0:
@@ -298,34 +354,24 @@ class CdcApplyEngine:
         return reason[: limit - 3] + "..."
 
     # -- apply paths ----------------------------------------------------------
-    def _apply_driver_side(
-        self, per_table: DataFrame, tables: list[str] | None = None
-    ) -> None:
+    def _apply_driver_side(self, per_table: DataFrame, tables: list[str]) -> None:
         """One connection, one transaction per table (the reference's
-        shape: a single sink task with a JDBC connection).
-
-        Rows stream through the driver via ``toLocalIterator`` in bounded
-        chunks (same discipline as the DLQ path) — driver memory stays
-        O(chunk) no matter how large the batch (e.g. a backfill replay),
-        while the transaction still spans the whole table."""
-        if tables is None:
-            tables = [
-                r[0] for r in per_table.select(self.table_col).distinct().collect()
-            ]
-        for table in sorted(tables):
+        shape: a single sink task with a JDBC connection). Rows stream
+        through the driver via ``toLocalIterator`` in bounded chunks."""
+        schema = per_table.drop(self.table_col, self.op_col).schema
+        route = _change_router(
+            self.dialect, self.pk_fields, self.value_cols, self.op_col
+        )
+        for table in tables:
             tdf = per_table.filter(F.col(self.table_col) == table).drop(self.table_col)
-            conn = self.connection_factory()
-            try:
-                self._ensure_table(conn, table, tdf)
-                self._write_stream(
-                    conn, table, tdf.toLocalIterator(prefetchPartitions=True)
+            with transaction(self.connection_factory) as conn:
+                self._ensure_table(conn, table, schema, self.pk_fields)
+                write_chunked(
+                    conn.cursor(),
+                    tdf.toLocalIterator(prefetchPartitions=True),
+                    functools.partial(route, table),
                 )
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
+            self._known_tables.add(table)
 
     def _apply_distributed(self, per_table: DataFrame) -> None:
         """Executor-side apply: repartition by (table, pk) so each key
@@ -333,62 +379,36 @@ class CdcApplyEngine:
         Requires a picklable connection factory (e.g. a psycopg2 DSN
         closure) and a target DB that takes concurrent writers."""
         factory = self.connection_factory
-        dialect = self.dialect
-        pk = self.pk_fields
-        value_cols = self.value_cols
-        op_col = self.op_col
         table_col = self.table_col
+        route = _change_router(
+            self.dialect, self.pk_fields, self.value_cols, self.op_col
+        )
 
         # DDL runs driver-side up front (one connection for all tables) so
         # executor partitions only ever issue DML — same auto_create/
         # auto_evolve semantics as the driver-side path. Every table
         # shares the batch schema, so no per-table filtering is needed.
         if self.auto_create or self.auto_evolve:
-            tables = [
-                r[0] for r in per_table.select(table_col).distinct().collect()
-            ]
-            schema_df = per_table.drop(table_col)
-            conn = self.connection_factory()
-            try:
-                for table in sorted(tables):
-                    self._ensure_table(conn, table, schema_df)
-                conn.commit()
-            finally:
-                conn.close()
+            tables = self._tables(per_table)
+            schema = per_table.drop(table_col, self.op_col).schema
+            with transaction(factory) as conn:
+                for table in tables:
+                    self._ensure_table(conn, table, schema, self.pk_fields)
+            self._known_tables.update(tables)
 
         def apply_partition(rows) -> None:
-            rows = list(rows)
-            if not rows:
+            rows = iter(rows)
+            first = next(rows, None)
+            if first is None:
                 return
-            conn = factory()
-            try:
-                by_table: dict[str, list] = {}
-                for r in rows:
-                    by_table.setdefault(r[table_col], []).append(r)
-                cur = conn.cursor()
-                for table, trows in by_table.items():
-                    upsert = dialect.upsert_sql(table, [*pk, *value_cols], pk)
-                    delete = dialect.delete_sql(table, pk)
-                    ups = [
-                        tuple(r[c] for c in [*pk, *value_cols])
-                        for r in trows
-                        if r[op_col] == OP_UPSERT
-                    ]
-                    dels = [
-                        tuple(r[c] for c in pk) for r in trows if r[op_col] == OP_DELETE
-                    ]
-                    if ups:
-                        cur.executemany(upsert, ups)
-                    if dels:
-                        cur.executemany(delete, dels)
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
+            with transaction(factory) as conn:
+                write_chunked(
+                    conn.cursor(),
+                    itertools.chain([first], rows),
+                    lambda r: route(r[table_col], r),
+                )
 
-        keys = [table_col] + pk
+        keys = [table_col] + self.pk_fields
         if self.num_partitions is not None:
             shaped = per_table.repartition(self.num_partitions, *keys)
         else:
@@ -396,17 +416,13 @@ class CdcApplyEngine:
         shaped.foreachPartition(apply_partition)
 
     # -- DDL (K6/K7) -----------------------------------------------------------
-    def _ensure_table(self, conn, table: str, tdf: DataFrame) -> None:
-        schema_fields = [
-            f for f in tdf.schema.fields if f.name not in (self.op_col,)
-        ]
-        from pyspark.sql import types as T
-
-        schema = T.StructType(schema_fields)
+    def _ensure_table(self, conn, table: str, schema: T.StructType, pk) -> None:
+        """Auto-create ``table`` from ``schema`` with primary key ``pk``,
+        then add any column the target lacks. The caller adds the table
+        to ``_known_tables`` once its transaction commits."""
         cur = conn.cursor()
         if self.auto_create and table not in self._known_tables:
-            cur.execute(self.dialect.create_table_sql(table, schema, self.pk_fields))
-            self._known_tables.add(table)
+            cur.execute(self.dialect.create_table_sql(table, schema, pk))
         if self.auto_evolve:
             existing = self._existing_columns(conn, table)
             if existing is not None:
@@ -427,31 +443,3 @@ class CdcApplyEngine:
             return {self.dialect.normalize_identifier(d[0]) for d in cur.description}
         except Exception:  # noqa: BLE001
             return None
-
-    # -- DML -------------------------------------------------------------------
-    def _write_stream(self, conn, table: str, rows, chunk_size: int = 10_000) -> None:
-        """Batched upserts + deletes from a row iterator, flushed every
-        ``chunk_size``. Keys are unique after last-write-wins dedup, so
-        flush order between the upsert and delete statements is free."""
-        cols = [*self.pk_fields, *self.value_cols]
-        upsert = self.dialect.upsert_sql(table, cols, self.pk_fields)
-        delete = self.dialect.delete_sql(table, self.pk_fields)
-        cur = conn.cursor()
-        ups: list[tuple] = []
-        dels: list[tuple] = []
-        for r in rows:
-            op = r[self.op_col]
-            if op == OP_UPSERT:
-                ups.append(tuple(r[c] for c in cols))
-                if len(ups) >= chunk_size:
-                    cur.executemany(upsert, ups)
-                    ups = []
-            elif op == OP_DELETE:
-                dels.append(tuple(r[c] for c in self.pk_fields))
-                if len(dels) >= chunk_size:
-                    cur.executemany(delete, dels)
-                    dels = []
-        if ups:
-            cur.executemany(upsert, ups)
-        if dels:
-            cur.executemany(delete, dels)

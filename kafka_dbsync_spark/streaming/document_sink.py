@@ -13,29 +13,27 @@ Mirrors the reference's MongoSinkConnector deployment
   set ``tombstones="delete"`` for the DeleteOne strategy instead.
 
 No document database exists in this container, so the storage engine is
-any DB-API target holding ``(_id TEXT PRIMARY KEY, doc TEXT)`` — the
-collection's keyed replace/delete semantics are what is being
-engineered and tested; a real MongoDB client plugs in by swapping
-``_write`` (one bulk ReplaceOne/DeleteOne per chunk). Scale shape: one
-LWW dedup shuffle on _id (same as the CDC engine), then a driver-side
-single-writer stream in bounded chunks (the connector's tasks.max=1
-shape).
+any DB-API target holding ``(_id TEXT PRIMARY KEY, doc TEXT)``; a real
+MongoDB client plugs in at the ``write_chunked`` call (one bulk
+ReplaceOne/DeleteOne per chunk).
 """
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.operators.merge import latest_by_key
+from kafka_dbsync_spark.streaming.apply import (
+    BatchSink,
+    transaction,
+    write_chunked,
+)
 
-log = logging.getLogger(__name__)
 
-
-class DocumentApplyEngine:
+class DocumentApplyEngine(BatchSink):
     """foreachBatch engine applying micro-batches as document replaces.
 
     Expects columns: ``record_key`` / ``record_value`` (JSON strings) and
@@ -72,12 +70,6 @@ class DocumentApplyEngine:
         self.order_col = order_col
         self._created = False
 
-    def foreach_batch(self):
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(batch_df, epoch_id)
-
-        return fn
-
     def apply_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         src = F.col(
             "record_value" if self.id_strategy == "value" else "record_key"
@@ -96,49 +88,26 @@ class DocumentApplyEngine:
         rows = deduped.select("__id", "record_value").toLocalIterator(
             prefetchPartitions=True
         )
-        conn = self.connection_factory()
-        try:
-            cur = conn.cursor()
-            created_now = False
-            if not self._created:
-                cur.execute(
-                    f'CREATE TABLE IF NOT EXISTS "{self.collection}" '
-                    '("_id" TEXT PRIMARY KEY, "doc" TEXT)'
-                )
-                created_now = True
-            self._write(cur, rows)
-            conn.commit()
-            # only after commit: a rollback on a transactional-DDL target
-            # undoes the CREATE, and a pre-set flag would make every
-            # retry fail with "no such table"
-            if created_now:
-                self._created = True
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-
-    def _write(self, cur, rows, chunk_size: int = 10_000) -> None:
         replace = (
             f'INSERT INTO "{self.collection}" ("_id", "doc") VALUES (?, ?) '
             'ON CONFLICT ("_id") DO UPDATE SET "doc" = EXCLUDED."doc"'
         )
         delete = f'DELETE FROM "{self.collection}" WHERE "_id" = ?'
-        ups: list[tuple] = []
-        dels: list[tuple] = []
-        for r in rows:
+
+        def route(r):
             if r["record_value"] is None:  # reachable only in delete mode
-                dels.append((r["__id"],))
-                if len(dels) >= chunk_size:
-                    cur.executemany(delete, dels)
-                    dels = []
-            else:
-                ups.append((r["__id"], r["record_value"]))
-                if len(ups) >= chunk_size:
-                    cur.executemany(replace, ups)
-                    ups = []
-        if ups:
-            cur.executemany(replace, ups)
-        if dels:
-            cur.executemany(delete, dels)
+                return delete, (r["__id"],)
+            return replace, (r["__id"], r["record_value"])
+
+        with transaction(self.connection_factory) as conn:
+            cur = conn.cursor()
+            if not self._created:
+                cur.execute(
+                    f'CREATE TABLE IF NOT EXISTS "{self.collection}" '
+                    '("_id" TEXT PRIMARY KEY, "doc" TEXT)'
+                )
+            write_chunked(cur, rows, route)
+        # only after commit: a rollback on a transactional-DDL target
+        # undoes the CREATE, and a pre-set flag would make every retry
+        # fail with "no such table"
+        self._created = True

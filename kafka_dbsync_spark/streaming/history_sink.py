@@ -1,27 +1,17 @@
 """SCD Type-2 history sink — the apply engine's audit-table twin.
 
-Where ``CdcApplyEngine`` keeps the *latest* row per key (the reference's
-destructive upsert/delete semantics), this engine keeps *every version*
-with its validity interval — the shape compliance/audit/replication
-users put next to the live target:
+Where ``CdcApplyEngine`` keeps the *latest* row per key, this engine
+keeps *every version* with its validity interval. Its invariant is
+replay idempotence across batches:
 
 - intra-batch versions come from ``operators/history.py::scd2_history``
   (upserts open versions, the next change closes them, deletes close
   without emitting);
-- cross-batch closure: the FIRST change per key in a batch closes the
-  key's still-open version in the target table;
-- replay idempotence: version rows upsert on PK ``(key…, valid_from)``,
-  and the closing UPDATE is guarded with ``valid_from < first_change``
-  so replaying a batch never closes its own freshly-opened versions.
-
-Driver-side write, same discipline as the base engine (chunked
-``toLocalIterator``, one transaction per table, rollback on failure).
-
-Scale notes: the one shuffle is the per-key lead window — the same key
-partitioning as the merge path, so a pipeline feeding both sinks from
-one batch reuses the exchange. Versions stream through the driver
-bounded; at executor-side scale the same SQL ladder runs per partition
-(repartition by key keeps a key's versions + closure on one connection).
+- the FIRST change per key in a batch closes the key's still-open
+  version in the target table, and that UPDATE is guarded with
+  ``valid_from < first_change`` so replaying a batch never closes its
+  own freshly-opened versions;
+- version rows upsert on PK ``(key…, valid_from)``.
 """
 
 from __future__ import annotations
@@ -30,7 +20,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.operators.history import scd2_history
-from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+from kafka_dbsync_spark.streaming.apply import (
+    CdcApplyEngine,
+    transaction,
+    write_chunked,
+)
 
 _HISTORY_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -59,12 +53,7 @@ class Scd2ApplyEngine(CdcApplyEngine):
 
         batch_df = batch_df.persist()
         try:
-            if "error_reason" in batch_df.columns:
-                corrupt = batch_df.filter(F.col("error_reason").isNotNull())
-                valid = batch_df.filter(F.col("error_reason").isNull())
-                self._handle_corrupt(corrupt)
-            else:
-                valid = batch_df
+            valid = self._split_corrupt(batch_df)
 
             keyed = valid.select(
                 self.table_col, *self.pk_fields, *self.value_cols,
@@ -83,10 +72,7 @@ class Scd2ApplyEngine(CdcApplyEngine):
                 F.min(order).alias("__close_at")
             )
 
-            tables = sorted(
-                r[0] for r in
-                valid.select(self.table_col).distinct().collect()
-            )
+            tables = self._tables(valid)
             if len(tables) > 1:
                 versions = versions.persist()
                 closes = closes.persist()
@@ -106,63 +92,31 @@ class Scd2ApplyEngine(CdcApplyEngine):
     ) -> None:
         vdf = versions.filter(F.col(self.table_col) == table).drop(self.table_col)
         cdf = closes.filter(F.col(self.table_col) == table).drop(self.table_col)
-        conn = self.connection_factory()
-        try:
-            self._ensure_history_table(conn, table, vdf)
+        q, p = self.dialect.quote, self.dialect.placeholder
+        where_pk = " AND ".join(f"{q(c)} = {p}" for c in self.pk_fields)
+        close_sql = (
+            f"UPDATE {q(table)} SET {q('valid_to')} = {p}, "
+            f"{q('is_current')} = 0 "
+            f"WHERE {where_pk} AND {q('valid_to')} IS NULL "
+            f"AND {q('valid_from')} < {p}"
+        )
+        cols = [*self.pk_fields, *self.value_cols, *_HISTORY_COLS]
+        version_pk = [*self.pk_fields, "valid_from"]
+        upsert = self.dialect.upsert_sql(table, cols, version_pk)
+
+        def close(r):
+            at = r["__close_at"]
+            return close_sql, (at, *[r[c] for c in self.pk_fields], at)
+
+        with transaction(self.connection_factory) as conn:
+            self._ensure_table(conn, table, vdf.schema, version_pk)
             cur = conn.cursor()
-            q = self.dialect.quote
             # 1) close open versions for keys changed in this batch
-            where_pk = " AND ".join(f"{q(c)} = ?" for c in self.pk_fields)
-            close_sql = (
-                f"UPDATE {q(table)} SET {q('valid_to')} = ?, "
-                f"{q('is_current')} = 0 "
-                f"WHERE {where_pk} AND {q('valid_to')} IS NULL "
-                f"AND {q('valid_from')} < ?"
-            )
-            chunk: list[tuple] = []
-            for r in cdf.toLocalIterator(prefetchPartitions=True):
-                at = r["__close_at"]
-                chunk.append((at, *[r[c] for c in self.pk_fields], at))
-                if len(chunk) >= 10_000:
-                    cur.executemany(close_sql, chunk)
-                    chunk = []
-            if chunk:
-                cur.executemany(close_sql, chunk)
+            write_chunked(cur, cdf.toLocalIterator(prefetchPartitions=True), close)
             # 2) upsert version rows (PK = key + valid_from → replay-safe)
-            cols = [*self.pk_fields, *self.value_cols, *_HISTORY_COLS]
-            upsert = self.dialect.upsert_sql(
-                table, cols, [*self.pk_fields, "valid_from"]
+            write_chunked(
+                cur,
+                vdf.toLocalIterator(prefetchPartitions=True),
+                lambda r: (upsert, tuple(r[c] for c in cols)),
             )
-            chunk = []
-            for r in vdf.toLocalIterator(prefetchPartitions=True):
-                chunk.append(tuple(r[c] for c in cols))
-                if len(chunk) >= 10_000:
-                    cur.executemany(upsert, chunk)
-                    chunk = []
-            if chunk:
-                cur.executemany(upsert, chunk)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-
-    def _ensure_history_table(self, conn, table: str, vdf: DataFrame) -> None:
-        from pyspark.sql import types as T
-
-        schema = T.StructType([f for f in vdf.schema.fields])
-        cur = conn.cursor()
-        if self.auto_create and table not in self._known_tables:
-            cur.execute(
-                self.dialect.create_table_sql(
-                    table, schema, [*self.pk_fields, "valid_from"]
-                )
-            )
-            self._known_tables.add(table)
-        if self.auto_evolve:
-            existing = self._existing_columns(conn, table)
-            if existing is not None:
-                for f in schema.fields:
-                    if f.name.lower() not in existing:
-                        cur.execute(self.dialect.add_column_sql(table, f))
+        self._known_tables.add(table)

@@ -28,41 +28,20 @@ path, checkpoint + idempotent merge.
 from __future__ import annotations
 
 import logging
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.entrytype import OP_UPSERT
-from kafka_dbsync_spark.operators.merge import apply_changes
+from kafka_dbsync_spark.operators.merge import apply_changes, latest_by_key
+from kafka_dbsync_spark.streaming.apply import BatchSink
 
 log = logging.getLogger(__name__)
 
 _PART = "__part"
 _DELETED = "__deleted"
-
-
-def _align_schemas(changes, base_touched, batch_schema, value_cols):
-    """ADDITIVE schema evolution (the lake-side analogue of the JDBC
-    path's ALTER ADD COLUMN, K7): return (changes, base, value_cols)
-    with the UNION of value columns on both sides — columns new in the
-    batch backfill NULL on existing rows; columns absent from the batch
-    carry NULL on its rows (the batch is a full row image, same as the
-    JDBC upsert). Dropping columns is not supported (same as the
-    reference)."""
-    base_cols = base_touched.columns
-    new_cols = [c for c in value_cols if c not in base_cols]
-    for c in new_cols:
-        base_touched = base_touched.withColumn(
-            c, F.lit(None).cast(batch_schema[c].dataType)
-        )
-    missing_in_batch = [c for c in base_cols if c not in value_cols]
-    for c in missing_in_batch:
-        changes = changes.withColumn(
-            c, F.lit(None).cast(base_touched.schema[c].dataType)
-        )
-    value_cols = [*base_cols, *new_cols]
-    return changes, base_touched.select(*value_cols), value_cols
 
 
 def compact_partitioned_table(
@@ -130,12 +109,7 @@ def compact_partitioned_table(
         .filter(cond)
         .repartition(n_fat, F.col(part_col))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rows.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(rows, part_col, path)
     files_after = sum(
         1 for d in root.glob(f"{part_col}=*") for _ in d.glob("*.parquet")
     )
@@ -147,13 +121,22 @@ def compact_partitioned_table(
     }
 
 
-class ParquetMergeSink:
-    """foreachBatch sink merging keyed CDC batches into a parquet table.
+def _overwrite_partitions(df: DataFrame, part_col: str, path: str) -> None:
+    """Dynamic partition overwrite of ``path``: only the partitions
+    present in ``df`` are replaced. The mode is a per-write option, so a
+    concurrent writer in the same session keeps its own mode."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(path)
+    )
 
-    ``path`` is the table root (partitioned by ``__part``); ``key_cols``
-    the merge key; ``order_cols`` the intra-batch LWW order;
-    ``num_buckets`` the partition count (pick so one bucket ≈ a few
-    hundred MB at steady state)."""
+
+class _BucketMergeSink(BatchSink):
+    """The touched-bucket merge core shared by the lake sinks: rows live
+    in bucket ``__part = pmod(xxhash64(key), num_buckets)``, so a batch
+    reads, merges and rewrites only the buckets its keys hash into."""
 
     def __init__(
         self,
@@ -171,7 +154,6 @@ class ParquetMergeSink:
         self.num_buckets = num_buckets
         self.op_col = op_col
 
-    # -- helpers ------------------------------------------------------------
     def _with_part(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             _PART,
@@ -179,6 +161,97 @@ class ParquetMergeSink:
                    F.lit(self.num_buckets)).cast("int"),
         )
 
+    def _align_schemas(self, changes, base, batch_schema, value_cols):
+        """ADDITIVE schema evolution (the lake-side analogue of the JDBC
+        path's ALTER ADD COLUMN, K7): return (changes, base, value_cols)
+        with the UNION of value columns on both sides — columns new in the
+        batch backfill NULL on existing rows; columns absent from the batch
+        carry NULL on its rows (the batch is a full row image, same as the
+        JDBC upsert). Stored order columns and tombstone flags are not
+        value columns. Dropping columns is not supported (same as the
+        reference)."""
+        base_cols = [
+            c for c in base.columns if c not in (*self.order_cols, _DELETED)
+        ]
+        new_cols = [c for c in value_cols if c not in base_cols]
+        for c in new_cols:
+            base = base.withColumn(c, F.lit(None).cast(batch_schema[c].dataType))
+        for c in base_cols:
+            if c not in value_cols:
+                changes = changes.withColumn(
+                    c, F.lit(None).cast(base.schema[c].dataType)
+                )
+        return changes, base, [*base_cols, *new_cols]
+
+    def _merge_rows(self, changes, base, batch_schema, value_cols) -> DataFrame:
+        """Last write wins per key over the stored rows ``base`` (None for
+        none) and the batch's ``changes``; deleted keys drop out."""
+        if base is not None:
+            changes, base, value_cols = self._align_schemas(
+                changes, base, batch_schema, value_cols
+            )
+        return apply_changes(
+            changes.select(*value_cols, self.op_col, *self.order_cols),
+            key_cols=self.key_cols,
+            order_cols=self.order_cols,
+            op_col=self.op_col,
+            base=base,
+        ).drop(*self.order_cols)
+
+    @contextmanager
+    def _merged_buckets(
+        self,
+        batch_df: DataFrame,
+        read_base: Callable[[list[int]], DataFrame | None],
+    ):
+        """Merge ``batch_df`` into the buckets it touches. Yields
+        ``(touched, present, out)``: the sorted bucket ids the batch hashes
+        into, the ids still holding rows after the merge, and the merged
+        rows of those buckets, persisted for the caller's write and
+        repartitioned by bucket so each bucket is written as ONE file
+        (files per bucket would otherwise follow the shuffle's task
+        count, and at 100 TB scan cost follows file count, not bytes).
+        ``read_base(touched)`` returns the stored rows of the touched
+        buckets without ``__part``, or None. An empty batch yields
+        ``([], set(), None)``."""
+        changes = self._with_part(batch_df)
+        # the batch is small relative to the table: collect its touched
+        # bucket ids (≤ num_buckets ints) to drive partition pruning
+        touched = sorted(
+            r[0] for r in changes.select(_PART).distinct().collect()
+        )
+        if not touched:
+            yield touched, set(), None
+            return
+        value_cols = [
+            c
+            for c in batch_df.columns
+            if c not in (self.op_col, *self.order_cols)
+        ]
+        merged = self._merge_rows(
+            changes.drop(_PART), read_base(touched), batch_df.schema, value_cols
+        )
+        out = (
+            self._with_part(merged)
+            .repartition(len(touched), F.col(_PART))
+            .persist()
+        )
+        try:
+            present = {r[0] for r in out.select(_PART).distinct().collect()}
+            yield touched, present, out
+        finally:
+            out.unpersist()
+
+
+class ParquetMergeSink(_BucketMergeSink):
+    """foreachBatch sink merging keyed CDC batches into a parquet table.
+
+    ``path`` is the table root (partitioned by ``__part``); ``key_cols``
+    the merge key; ``order_cols`` the intra-batch LWW order;
+    ``num_buckets`` the partition count (pick so one bucket ≈ a few
+    hundred MB at steady state)."""
+
+    # -- helpers ------------------------------------------------------------
     def _read_raw(self, spark: SparkSession) -> DataFrame | None:
         """Table WITH the partition column, or None if it doesn't exist
         yet. Only the path-not-found case maps to None — any other read
@@ -209,76 +282,23 @@ class ParquetMergeSink:
         return None if raw is None else raw.drop(_PART)
 
     # -- the merge ----------------------------------------------------------
-    def foreach_batch(self):
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(batch_df, epoch_id)
-
-        return fn
-
     def apply_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         """Merge one batch of (key…, value…, op, order…) rows."""
-        spark = batch_df.sparkSession
-        changes = self._with_part(batch_df)
-        # the batch is small relative to the table: collect its touched
-        # bucket ids (≤ num_buckets ints) to drive partition pruning
-        touched = sorted(
-            r[0] for r in changes.select(_PART).distinct().collect()
-        )
-        if not touched:
-            return
-        base = self._read_raw(spark)  # one listing serves existence
-        # probe AND the pruned base read below
-        value_cols = [
-            c
-            for c in batch_df.columns
-            if c not in (self.op_col, *self.order_cols)
-        ]
-        if base is not None:
-            # prune: only the touched partitions are read — the filter on
-            # the partition column reaches the file listing
-            base_touched = base.filter(F.col(_PART).isin(touched)).drop(_PART)
-            changes, base_touched, value_cols = _align_schemas(
-                changes, base_touched, batch_df.schema, value_cols
-            )
-        else:
-            base_touched = None
-        merged = apply_changes(
-            changes.drop(_PART).select(
-                *value_cols, self.op_col, *self.order_cols
-            ),
-            key_cols=self.key_cols,
-            order_cols=self.order_cols,
-            op_col=self.op_col,
-            base=base_touched,
-        ).drop(*self.order_cols, _PART)
-        # repartition BY the bucket column before writing: each bucket's
-        # rows land in one task, so every touched bucket gets exactly ONE
-        # new file per batch (otherwise files-per-bucket ≈ shuffle tasks,
-        # and at 100 TB scan cost follows file count, not bytes)
-        out = (
-            self._with_part(merged)
-            .repartition(max(len(touched), 1), F.col(_PART))
-            .persist()
-        )
-        try:
-            # dynamic overwrite: ONLY the partitions present in `out`
-            # (⊆ touched buckets) are replaced; untouched buckets' files
-            # are never listed or rewritten
-            present = {r[0] for r in out.select(_PART).distinct().collect()}
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                out.write.mode("overwrite").partitionBy(_PART).parquet(
-                    self.path
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        finally:
-            out.unpersist()
+
+        def read_base(touched):
+            # one listing serves the existence probe AND the pruned read:
+            # the filter on the partition column reaches the file listing
+            base = self._read_raw(batch_df.sparkSession)
+            if base is None:
+                return None
+            return base.filter(F.col(_PART).isin(touched)).drop(_PART)
+
+        with self._merged_buckets(batch_df, read_base) as (touched, present, out):
+            if out is None:
+                return
+            # ONLY the buckets present in `out` (⊆ touched) are replaced;
+            # untouched buckets' files are never listed or rewritten
+            _overwrite_partitions(out, _PART, self.path)
         # a bucket whose keys were ALL deleted produces no rows, so
         # dynamic overwrite leaves its stale files — clear those
         # directories explicitly (rare; on an object store this is the
@@ -319,7 +339,7 @@ class ParquetMergeSink:
         return df
 
 
-class VersionedParquetMergeSink:
+class VersionedParquetMergeSink(_BucketMergeSink):
     """Delta-parity VERSIONED keyed-merge lake sink: immutable data
     files + JSON manifests give snapshot isolation, time travel, and
     exactly-once batch replay — the remaining Delta gap after
@@ -385,13 +405,7 @@ class VersionedParquetMergeSink:
         in-order streaming contract's leaner table (no order/tombstone
         storage; tombstone retention cost is proportional to deleted
         keys until a vacuum-style purge)."""
-        if not key_cols or not order_cols:
-            raise ValueError("key_cols and order_cols must be non-empty")
-        self.path = path
-        self.key_cols = list(key_cols)
-        self.order_cols = list(order_cols)
-        self.num_buckets = num_buckets
-        self.op_col = op_col
+        super().__init__(path, key_cols, order_cols, num_buckets, op_col)
         self.ordered = ordered
 
     # -- manifests ----------------------------------------------------------
@@ -449,17 +463,34 @@ class VersionedParquetMergeSink:
                 "committed history was NOT overwritten"
             ) from None
 
-    def _publish(self, manifest: dict) -> None:
-        """Atomic put-if-absent commit: write to a temp name, hard-link
-        to the final name (fails if version N already exists — a
-        concurrent/duplicate writer must error, not clobber history),
-        unlink the temp."""
+    def _publish(
+        self, version, epoch_id, bmap, touched, present, schema, purge_watermark
+    ) -> None:
+        """Publish manifest ``version``: ``bmap`` with the ``touched``
+        buckets replaced by those ``present`` in ``v{version}``. Atomic
+        put-if-absent commit: write to a temp name, hard-link to the final
+        name (fails if version N already exists — a concurrent/duplicate
+        writer must error, not clobber history), unlink the temp."""
         import json
         import os
 
+        for p in touched:
+            bmap.pop(str(p), None)
+        for p in present:
+            bmap[str(p)] = f"v{version}/__part={p}"
+        manifest = {
+            "version": version,
+            "epoch_id": epoch_id,
+            "buckets": bmap,
+            "touched": [int(p) for p in touched],
+            "schema": schema,
+            "ordered": self.ordered,
+            "key_cols": self.key_cols,
+            "order_cols": self.order_cols,
+            "purge_watermark": purge_watermark,
+        }
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
-        version = manifest["version"]
         tmp = os.path.join(d, f".v{version}.json.tmp")
         final = os.path.join(d, f"v{version}.json")
         with open(tmp, "w") as f:
@@ -503,13 +534,6 @@ class VersionedParquetMergeSink:
             )
 
     # -- helpers ------------------------------------------------------------
-    def _with_part(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            _PART,
-            F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]),
-                   F.lit(self.num_buckets)).cast("int"),
-        )
-
     def _below_watermark(self, df: DataFrame, wm: Sequence):
         """Lexicographic ``order_cols < wm`` condition against ``df``'s
         column types (watermark values round-trip through manifest JSON,
@@ -525,12 +549,6 @@ class VersionedParquetMergeSink:
         return left < right
 
     # -- the merge ----------------------------------------------------------
-    def foreach_batch(self):
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(batch_df, epoch_id)
-
-        return fn
-
     def apply_batch(
         self, batch_df: DataFrame, epoch_id: int | None = None
     ) -> None:
@@ -571,79 +589,30 @@ class VersionedParquetMergeSink:
             batch_df = batch_df.filter(
                 ~self._below_watermark(batch_df, purge_wm)
             )
-        changes = self._with_part(batch_df)
-        touched = sorted(
-            r[0] for r in changes.select(_PART).distinct().collect()
-        )
-        if not touched:
-            return
-        value_cols = [
-            c
-            for c in batch_df.columns
-            if c not in (self.op_col, *self.order_cols)
-        ]
         bmap: dict[str, str] = dict(man["buckets"]) if man else {}
-        base_dirs = [
-            os.path.join(self.path, "_data", bmap[str(p)])
-            for p in touched
-            if str(p) in bmap
-        ]
-        if base_dirs:
+
+        def read_base(touched):
+            dirs = [
+                os.path.join(self.path, "_data", bmap[str(p)])
+                for p in touched
+                if str(p) in bmap
+            ]
+            if not dirs:
+                return None
             # leaf dirs are listed explicitly, so no partition column is
             # inferred; mergeSchema tolerates pre-evolution versions
-            base_touched = spark.read.option("mergeSchema", "true").parquet(
-                *base_dirs
-            )
-        else:
-            base_touched = None
-        if self.ordered:
-            merged = self._merge_ordered(
-                changes.drop(_PART), base_touched, batch_df.schema, value_cols
-            )
-        else:
-            if base_touched is not None:
-                changes, base_touched, value_cols = _align_schemas(
-                    changes, base_touched, batch_df.schema, value_cols
-                )
-            merged = apply_changes(
-                changes.drop(_PART).select(
-                    *value_cols, self.op_col, *self.order_cols
-                ),
-                key_cols=self.key_cols,
-                order_cols=self.order_cols,
-                op_col=self.op_col,
-                base=base_touched,
-            ).drop(*self.order_cols)
+            return spark.read.option("mergeSchema", "true").parquet(*dirs)
+
         newv = (latest or 0) + 1
-        out = (
-            self._with_part(merged)
-            .repartition(max(len(touched), 1), F.col(_PART))
-            .persist()
-        )
-        try:
-            present = {r[0] for r in out.select(_PART).distinct().collect()}
+        with self._merged_buckets(batch_df, read_base) as (touched, present, out):
+            if out is None:
+                return
             self._commit_data_dir(
                 lambda d: out.write.partitionBy(_PART).parquet(d), newv
             )
             schema_json = json.loads(out.drop(_PART).schema.json())
-        finally:
-            out.unpersist()
-        for p in touched:
-            bmap.pop(str(p), None)
-        for p in present:
-            bmap[str(p)] = f"v{newv}/__part={p}"
         self._publish(
-            {
-                "version": newv,
-                "epoch_id": epoch_id,
-                "buckets": bmap,
-                "touched": [int(p) for p in touched],
-                "schema": schema_json,
-                "ordered": self.ordered,
-                "key_cols": self.key_cols,
-                "order_cols": self.order_cols,
-                "purge_watermark": purge_wm,
-            }
+            newv, epoch_id, bmap, touched, present, schema_json, purge_wm
         )
 
     # -- reads --------------------------------------------------------------
@@ -675,44 +644,27 @@ class VersionedParquetMergeSink:
         return df
 
     # -- the ordered (out-of-order-safe) merge ------------------------------
-    def _merge_ordered(self, changes, base_touched, batch_schema, value_cols):
-        """Cross-batch LWW by TRUE change order: stored rows carry the
-        order columns and a tombstone flag, so a later batch replaying
-        an order BELOW the stored watermark loses — upserts cannot
-        regress and deletes cannot be resurrected under out-of-order
-        delivery. Ties (same key, same order — an exact replay) favor
-        the incoming row (identical content by the replay contract)."""
-        from kafka_dbsync_spark.operators.merge import latest_by_key
-
+    def _merge_rows(self, changes, base, batch_schema, value_cols) -> DataFrame:
+        """Cross-batch LWW by TRUE change order when ``ordered``: stored
+        rows carry the order columns and a tombstone flag, so a later
+        batch replaying an order BELOW the stored watermark loses —
+        upserts cannot regress and deletes cannot be resurrected under
+        out-of-order delivery. Ties (same key, same order — an exact
+        replay) favor the incoming row (identical content by the replay
+        contract)."""
+        if not self.ordered:
+            return super()._merge_rows(changes, base, batch_schema, value_cols)
         c = changes.withColumn(
             _DELETED, F.col(self.op_col) != F.lit(OP_UPSERT)
         ).drop(self.op_col)
-        if base_touched is not None:
-            base_value_cols = [
-                col
-                for col in base_touched.columns
-                if col not in (*self.order_cols, _DELETED)
-            ]
-            new_cols = [col for col in value_cols if col not in base_value_cols]
-            for col in new_cols:
-                base_touched = base_touched.withColumn(
-                    col, F.lit(None).cast(batch_schema[col].dataType)
-                )
-            missing = [col for col in base_value_cols if col not in value_cols]
-            for col in missing:
-                c = c.withColumn(
-                    col, F.lit(None).cast(base_touched.schema[col].dataType)
-                )
-            value_cols = [*base_value_cols, *new_cols]
-            cols = [*value_cols, *self.order_cols, _DELETED]
-            u = (
-                base_touched.select(*cols).withColumn("__src", F.lit(0))
-                .unionByName(c.select(*cols).withColumn("__src", F.lit(1)))
+        if base is not None:
+            c, base, value_cols = self._align_schemas(
+                c, base, batch_schema, value_cols
             )
-        else:
-            u = c.select(
-                *value_cols, *self.order_cols, _DELETED
-            ).withColumn("__src", F.lit(1))
+        cols = [*value_cols, *self.order_cols, _DELETED]
+        u = c.select(*cols).withColumn("__src", F.lit(1))
+        if base is not None:
+            u = base.select(*cols).withColumn("__src", F.lit(0)).unionByName(u)
         return latest_by_key(
             u, self.key_cols, [*self.order_cols, "__src"]
         ).drop("__src")
@@ -787,6 +739,7 @@ class VersionedParquetMergeSink:
             affected = sorted(int(r[_PART]) for r in stats)
             n_purged = sum(r["count"] for r in stats)
         newv = latest + 1
+        present: set[int] = set()
         if affected:
             dirs = [
                 os.path.join(self.path, "_data", bmap[str(p)])
@@ -810,23 +763,7 @@ class VersionedParquetMergeSink:
                     )
             finally:
                 out.unpersist()
-            for p in affected:
-                bmap.pop(str(p), None)
-            for p in present:
-                bmap[str(p)] = f"v{newv}/__part={p}"
-        self._publish(
-            {
-                "version": newv,
-                "epoch_id": None,
-                "buckets": bmap,
-                "touched": affected,
-                "schema": man["schema"],
-                "ordered": self.ordered,
-                "key_cols": self.key_cols,
-                "order_cols": self.order_cols,
-                "purge_watermark": wm,
-            }
-        )
+        self._publish(newv, None, bmap, affected, present, man["schema"], wm)
         return {
             "tombstones_purged": n_purged,
             "buckets_rewritten": len(affected),

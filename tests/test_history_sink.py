@@ -4,7 +4,13 @@ from __future__ import annotations
 
 import sqlite3
 
-from kafka_dbsync_spark.streaming.dialects import SqliteDialect
+import pytest
+
+from kafka_dbsync_spark.streaming.dialects import (
+    MySqlDialect,
+    PostgreSqlDialect,
+    SqliteDialect,
+)
 from kafka_dbsync_spark.streaming.history_sink import Scd2ApplyEngine
 
 
@@ -161,3 +167,92 @@ def test_scd2_sink_streaming_with_restart(tmp_path, spark, kafka_schema):
     q2.processAllAvailable()
     q2.stop()
     assert history() == expect
+
+
+class _RecordingConnection:
+    """DB-API stand-in that records every statement; its tables report
+    ``columns`` as the declared (case-preserved) column names."""
+
+    def __init__(self, log, columns):
+        self.log = log
+        self.columns = columns
+
+    def cursor(self):
+        return _RecordingCursor(self)
+
+    def commit(self):
+        pass
+
+    def rollback(self):
+        pass
+
+    def close(self):
+        pass
+
+
+class _RecordingCursor:
+    description = None
+
+    def __init__(self, conn):
+        self.conn = conn
+
+    def execute(self, sql, params=()):
+        self.conn.log.append(sql)
+        if sql.startswith("SELECT"):
+            self.description = [(c,) for c in self.conn.columns]
+
+    def executemany(self, sql, rows):
+        self.conn.log.append(sql)
+
+
+@pytest.mark.parametrize("dialect", [PostgreSqlDialect(), MySqlDialect()])
+def test_scd2_statements_follow_the_dialect(spark, dialect):
+    """The close UPDATE uses the dialect's placeholder, and auto-evolve
+    compares column names the dialect's way (MySQL keeps case)."""
+    log: list[str] = []
+    columns = ["ID", "NAME", "valid_from", "valid_to", "is_current"]
+    eng = Scd2ApplyEngine(
+        connection_factory=lambda: _RecordingConnection(log, columns),
+        dialect=dialect,
+        pk_fields=["ID"],
+        value_cols=["NAME"],
+        table_col="tbl",
+        order_cols=["off"],
+        distribute=False,
+    )
+    eng.apply_batch(
+        spark.createDataFrame(
+            [(1, "a", "t1", 1, "upsert")],
+            "ID long, NAME string, tbl string, off long, op string",
+        )
+    )
+    close = [s for s in log if s.startswith("UPDATE")]
+    assert len(close) == 1
+    assert "?" not in close[0] and close[0].count("%s") == 3
+    assert not [s for s in log if s.startswith("ALTER")]
+
+
+def test_scd2_dead_letters_carry_created_at(tmp_path, spark):
+    db = str(tmp_path / "h.db")
+    eng = Scd2ApplyEngine(
+        connection_factory=lambda: sqlite3.connect(db),
+        dialect=SqliteDialect(),
+        pk_fields=["id"],
+        value_cols=["v"],
+        table_col="tbl",
+        order_cols=["off"],
+        errors_tolerance="all",
+        corrupt_table="dlq",
+    )
+    eng.apply_batch(
+        spark.createDataFrame(
+            [(1, "a", "t1", 1, "upsert", None), (2, None, "t1", 2, "upsert", "bad")],
+            "id long, v string, tbl string, off long, op string, error_reason string",
+        )
+    )
+    con = sqlite3.connect(db)
+    # unquoted: sqlite reads a quoted unknown column as a string literal
+    rows = con.execute("SELECT error_reason, created_at FROM dlq").fetchall()
+    con.close()
+    assert len(rows) == 1 and rows[0][0] == "bad" and rows[0][1]
+    assert _history(db) == [(1, "a", 1, None, 1)]

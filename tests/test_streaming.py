@@ -196,3 +196,20 @@ def test_batch_backfill_then_stream_shares_chain(tmp_path, spark, kafka_schema):
     snapshot = spark.createDataFrame(canonical(), kafka_schema)
     pipeline.run_batch(extract(snapshot))
     assert table_state(db, "test_orders") == [(1, "A", "NEW"), (2, "B2", "SHIPPED")]
+
+
+def test_pipeline_sink_config_is_the_engine_kwargs():
+    """The sink config passes straight to CdcApplyEngine: an omitted key
+    keeps the engine's default, a misspelt one raises instead of silently
+    turning a feature (here the dead-letter table) off."""
+    sink = {k: v for k, v in PIPELINE_CONFIG["sink"].items() if k != "order_cols"}
+    pipeline = CdcPipeline(
+        {**PIPELINE_CONFIG, "sink": sink}, connection_factory=sqlite3.connect
+    )
+    # None = per-batch (partition, offset), the engine's own default
+    assert pipeline.engine.order_cols is None
+    with pytest.raises(TypeError, match="corrupt_tabel"):
+        CdcPipeline(
+            {**PIPELINE_CONFIG, "sink": {**sink, "corrupt_tabel": "dlq"}},
+            connection_factory=sqlite3.connect,
+        )

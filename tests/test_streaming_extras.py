@@ -113,3 +113,84 @@ def test_auto_evolve_adds_column(tmp_path, spark, kafka_schema):
     con.close()
     assert cols2 == {"ID", "ORDER_NAME", "STATUS"}
     assert rows == [(1, "A", None), (2, "B", "PAID")]
+
+
+class _TransactionalDdlConnection:
+    """sqlite with every statement inside one explicit transaction, so a
+    rollback also undoes CREATE TABLE (as on PostgreSQL). ``fail_on``
+    names the tables whose next ``executemany`` fails once."""
+
+    def __init__(self, db, fail_on):
+        self._conn = sqlite3.connect(db, isolation_level=None)
+        self._conn.execute("BEGIN")
+        self._fail_on = fail_on
+
+    def cursor(self):
+        return _FailOnceCursor(self._conn.cursor(), self._fail_on)
+
+    def commit(self):
+        self._conn.commit()
+
+    def rollback(self):
+        self._conn.rollback()
+
+    def close(self):
+        self._conn.close()
+
+
+class _FailOnceCursor:
+    def __init__(self, cur, fail_on):
+        self._cur = cur
+        self._fail_on = fail_on
+
+    @property
+    def description(self):
+        return self._cur.description
+
+    def execute(self, sql, params=()):
+        return self._cur.execute(sql, params)
+
+    def executemany(self, sql, rows):
+        for table in list(self._fail_on):
+            if f'INTO "{table}"' in sql:
+                self._fail_on.remove(table)
+                raise sqlite3.OperationalError(f"injected failure on {table}")
+        return self._cur.executemany(sql, rows)
+
+
+@pytest.mark.parametrize("failing", ["orders", "dlq"])
+def test_replay_after_rolled_back_create_converges(tmp_path, spark, failing):
+    """A batch that fails after its CREATE TABLE rolls the CREATE back on a
+    transactional-DDL target; the replay must create the table again."""
+    from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+    from kafka_dbsync_spark.streaming.dialects import SqliteDialect
+
+    db = str(tmp_path / "t.db")
+    fail_on = [failing]
+    engine = CdcApplyEngine(
+        lambda: _TransactionalDdlConnection(db, fail_on),
+        SqliteDialect(),
+        pk_fields=["ID"],
+        value_cols=["ORDER_NAME", "STATUS"],
+        order_cols=["offset"],
+        errors_tolerance="all",
+        corrupt_table="dlq",
+        distribute=False,
+    )
+    batch = spark.createDataFrame(
+        [
+            ("orders", 1, "a", "NEW", "upsert", 0, None),
+            ("orders", 2, "b", "NEW", "upsert", 1, None),
+            ("orders", 3, None, None, "upsert", 2, "bad record"),
+        ],
+        "target_table string, ID long, ORDER_NAME string, STATUS string, "
+        "op string, offset long, error_reason string",
+    )
+    with pytest.raises(sqlite3.OperationalError, match="injected"):
+        engine.apply_batch(batch)
+    engine.apply_batch(batch)  # the replay
+    assert table_state(db, "orders") == [(1, "a", "NEW"), (2, "b", "NEW")]
+    con = sqlite3.connect(db)
+    reasons = {r[0] for r in con.execute('SELECT error_reason FROM "dlq"')}
+    con.close()
+    assert reasons == {"bad record"}

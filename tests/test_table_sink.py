@@ -411,3 +411,36 @@ def test_compact_handles_string_and_null_partitions(spark, tmp_path):
             n = sum(1 for f in os.listdir(os.path.join(path, d))
                     if f.endswith(".parquet"))
             assert n == 1                         # one file per partition
+
+
+def test_merge_and_compact_leave_session_overwrite_mode_alone(
+    spark, tmp_path, monkeypatch
+):
+    """Dynamic overwrite is a per-write option: the sink never switches
+    the session-wide partitionOverwriteMode, which a concurrent stream in
+    the same session relies on, and untouched buckets survive."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    sink = make_sink(tmp_path, buckets=4)
+    sink.apply_batch(
+        spark.createDataFrame(
+            [(k, f"a{k}", OP_UPSERT, k) for k in range(16)], SCHEMA
+        )
+    )
+    sink.apply_batch(spark.createDataFrame([(0, "b0", OP_UPSERT, 20)], SCHEMA))
+    expect = {0: "b0", **{k: f"a{k}" for k in range(1, 16)}}
+    assert rows_of(sink, spark) == expect
+    _append_fragmented(spark, sink.path, [100, 104], "x", parallelism=2)
+    assert sink.compact(spark)["buckets_compacted"] >= 1
+    assert rows_of(sink, spark) == {**expect, 100: "x100", 104: "x104"}
+    assert sets == []
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    assert mode.upper() == "STATIC"
